@@ -17,7 +17,7 @@ Pipeline.process (layout-on path, /root/reference/glmocr/pipeline/pipeline.py:28
   -> ResultFormatter semantics (T/J/A ops)    result_formatter.py:135-212
 
 Per-turn work is pure and independent: the Spark layer runs this inside
-mapInPandas with zero shuffle.
+mapInArrow with zero shuffle.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Spark extraction pipeline: transcripts table -> extracted table.
 
 Design (SURVEY.md §7.0): per-turn work is pure and independent, so the whole
-extraction is a single `mapInPandas` — a shuffle-free narrow map. The only
+extraction is a single `mapInArrow` — a shuffle-free narrow map. The only
 data that ever needs to cross the wire downstream is the extracted output
 (spans + text), never the raw payloads, satisfying the north rule's
 "shuffle volume bounded by map-side block scoring".
@@ -10,9 +10,11 @@ Scale notes (100 TB / 10^12 turns):
   - No groupBy/join anywhere in the hot path: throughput scales linearly with
     executors; scaling efficiency is bounded only by input split balance.
   - Skew: a single 10^6-turn conversation is harmless because the unit of
-    parallelism is the *turn*, not the conversation. `repartition_salted` is
-    provided for writers that want conv_id-clustered output without hot
-    partitions (salt = turn_idx // block).
+    parallelism is the *turn*, not the conversation. The batch writer
+    (`run`) clusters output with `repartition_salted`, a hash exchange on
+    (conv_id, turn_idx // 64): a hot conversation spreads over many files
+    instead of pinning one reducer, and the kernel runs once per turn (a
+    range exchange would sample its input, re-running the kernel).
   - Arrow batches bound executor memory (spark.sql.execution.arrow.
     maxRecordsPerBatch); payloads never accumulate beyond one batch.
   - Filter/prune: reading from parquet/Iceberg, only the 5 input columns are
@@ -28,7 +30,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -96,7 +97,10 @@ def get_spark(app: str = "glm-ocr-spark", master: str | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.driver.extraJavaOptions", "-XX:MaxDirectMemorySize=2g")
         .config("spark.sql.session.timeZone", "UTC")
-        # CPU-bound pandas-UDF extraction wants far smaller input splits than
+        # ANSI casts (Spark 4's default, pinned): extract_transcripts casts
+        # its key columns and relies on an overflow failing, not wrapping
+        .config("spark.sql.ansi.enabled", "true")
+        # CPU-bound Python-UDF extraction wants far smaller input splits than
         # the 128 MB scan default: one split must be minutes of CPU, not
         # hours, and there must be >= cores splits for small inputs too.
         .config("spark.sql.files.maxPartitionBytes", "8m")
@@ -113,67 +117,16 @@ def get_spark(app: str = "glm-ocr-spark", master: str | None = None,
     return b.getOrCreate()
 
 
-def _extract_batches(batches, passthrough=(), extractor=None):
-    """mapInPandas body: vectorized over Arrow batches; per-turn kernel calls
-    inside the batch (the reference also loops per page within a GPU batch,
-    layout_detector.py:186-251). Turns with a non-empty `tool` are the
-    skip-task analog (FIXTURES.md §1): kept, but content is None. A turn
-    whose extraction raises is dead-lettered into the `error` column instead
-    of failing the task."""
-    fn = extractor or extract_turn
-    for pdf in batches:
-        # tolist() once per batch: per-element .iat[] pays pandas indexing
-        # overhead on every row (~10% of worker time at these payload sizes)
-        texts = pdf["text"].tolist()
-        tools = pdf["tool"].tolist()
-        n = len(pdf)
-        ext = [None] * n
-        md = [None] * n
-        js = [None] * n
-        spans: list = [[] for _ in range(n)]
-        nb = [0] * n
-        err = [None] * n
-        for i in range(n):
-            tool = tools[i]
-            if tool is not None and tool != "":
-                js[i] = "[[]]"
-                continue
-            try:
-                r = fn(texts[i])
-            except Exception as e:  # noqa: BLE001 - dead-letter, never fatal
-                js[i] = "[[]]"
-                err[i] = f"{type(e).__name__}: {e}"[:500]
-                continue
-            ext[i] = r["extracted_text"]
-            md[i] = r["markdown"]
-            js[i] = r["json"]
-            spans[i] = [
-                {"start": s, "end": e, "label": lab} for s, e, lab in r["spans"]
-            ]
-            nb[i] = r["n_blocks"]
-        out = {
-            "conv_id": pdf["conv_id"],
-            "turn_idx": pdf["turn_idx"],
-            "role": pdf["role"],
-            "extracted_text": ext,
-            "markdown": md,
-            "json": js,
-            "spans": spans,
-            "n_blocks": nb,
-            "error": err,
-        }
-        for col in passthrough:
-            out[col] = pdf[col]
-        yield pd.DataFrame(out)
-
-
 def _extract_arrow_batches(batches, passthrough=(), extractor=None):
-    """mapInArrow body: same per-turn dataflow as _extract_batches but on
-    raw Arrow record batches — key columns (conv_id, turn_idx, role, any
-    passthrough) are forwarded zero-copy instead of round-tripping through
-    pandas, payloads cross the boundary once (to_pylist), and outputs are
-    built by pyarrow's C++ converters (spans as list<struct> straight from
-    the kernel's (start, end, label) tuples, no per-span dicts)."""
+    """mapInArrow body: per-turn kernel calls over raw Arrow record batches
+    (the reference also loops per page within a GPU batch,
+    layout_detector.py:186-251). Key columns (conv_id, turn_idx, role, any
+    passthrough) are forwarded zero-copy, payloads cross the boundary once
+    (to_pylist), and outputs are built by pyarrow's C++ converters (spans as
+    list<struct> straight from the kernel's (start, end, label) tuples).
+    Turns with a non-empty `tool` are the skip-task analog (FIXTURES.md §1):
+    kept, but content is None. A turn whose extraction raises is
+    dead-lettered into the `error` column instead of failing the task."""
     import pyarrow as pa
 
     fn = extractor or extract_turn
@@ -233,6 +186,11 @@ def extract_transcripts(df: DataFrame,
     streaming watermarks). `mode`: "layout" (full block pipeline) or
     "ocr_only" (whole payload as one region — the reference's
     enable_layout=false path, pipeline.py:175-280).
+
+    The forwarded key columns are cast to their `EXTRACTED_SCHEMA` types, so
+    e.g. a bigint `turn_idx` from a schema-inferred table is accepted; under
+    ANSI casts (the `get_spark` default) a value out of int range fails the
+    job with CAST_OVERFLOW instead of being wrapped.
     """
     if mode == "ocr_only":
         from glm_ocr_spark.kernel.extract import extract_turn_ocr_only
@@ -245,7 +203,9 @@ def extract_transcripts(df: DataFrame,
     schema = T.StructType(EXTRACTED_SCHEMA.fields + [
         df.schema[c] for c in passthrough
     ])
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", *passthrough]
+    keys = [F.col(f.name).cast(f.dataType).alias(f.name)
+            for f in EXTRACTED_SCHEMA.fields[:3]]
+    cols = [*keys, "text", "tool", *passthrough]
 
     def body(batches):
         yield from _extract_arrow_batches(batches, passthrough=passthrough,
@@ -331,35 +291,39 @@ def conversation_rollup(extracted: DataFrame,
     )
 
 
-def repartition_salted(df: DataFrame, num_partitions: int,
+def repartition_salted(df: DataFrame, num_partitions: int | None = None,
                        salt_block: int = 64) -> DataFrame:
-    """Repartition by (conv_id, turn_idx // salt_block).
+    """Hash-repartition by (conv_id, turn_idx // salt_block).
 
     Keeps a conversation's turns mostly co-located for clustered writes while
     splitting pathological 10^5-turn conversations across partitions
     (SURVEY.md §4 "skew handling"; reference has no analog — its skew story
-    is the 128-worker cap, pipeline.py:432).
+    is the 128-worker cap, pipeline.py:432). With `num_partitions` omitted,
+    AQE sizes the output partitions.
     """
-    return df.repartition(
-        num_partitions,
-        F.col("conv_id"),
-        (F.col("turn_idx") / F.lit(salt_block)).cast("long"),
-    )
+    keys = (F.col("conv_id"),
+            (F.col("turn_idx") / F.lit(salt_block)).cast("long"))
+    if num_partitions is None:
+        return df.repartition(*keys)
+    return df.repartition(num_partitions, *keys)
 
 
 def run(spark: SparkSession, input_path: str, output_path: str,
         fmt: str = "parquet", mode: str = "layout", config=None) -> None:
-    """Batch job entry: read transcripts, extract, write partitioned output.
+    """Batch job entry: read transcripts, extract, write the output.
 
-    Output is ordered within files by (conv_id, turn_idx) via a range
-    repartition + in-partition sort (north-rule stable ordering) without a
-    global single-reducer sort. `mode`/`config` come from the resolution
+    Output layout: the extracted rows are hash-repartitioned with
+    `repartition_salted` and sorted within partitions, so every file is
+    sorted by (conv_id, turn_idx) and each 64-turn block of a conversation
+    lives in exactly one file. There is no order across files: readers that
+    need a global order sort. The kernel runs once per turn and only
+    extracted output is shuffled. `mode`/`config` come from the resolution
     chain (config_loader.load_config: kwargs > env > .env > YAML > defaults).
     """
     df = spark.read.format(fmt).load(input_path)
     out = extract_transcripts(df, mode=mode, config=config)
     (
-        out.repartitionByRange("conv_id", "turn_idx")
+        repartition_salted(out)
         .sortWithinPartitions("conv_id", "turn_idx")
         .write.mode("overwrite")
         .format(fmt)

@@ -70,7 +70,7 @@ class TestKernelVsOracle:
 
 @pytest.mark.usefixtures("spark")
 class TestSparkVsOracle:
-    """Distributed pipeline equality: Spark mapInPandas output must match the
+    """Distributed pipeline equality: Spark mapInArrow output must match the
     oracle row-for-row under stable (conv_id, turn_idx) ordering."""
 
     def test_extract_pipeline_sf0001_sample(self, spark):

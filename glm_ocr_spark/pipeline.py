@@ -29,6 +29,7 @@ vectorized kernel calls.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -117,6 +118,45 @@ def get_spark(app: str = "glm-ocr-spark", master: str | None = None,
     return b.getOrCreate()
 
 
+def _gate_zip_invalidation() -> None:
+    """Make `importlib.invalidate_caches()` cheap for unchanged zip archives.
+
+    pyspark's worker calls `importlib.invalidate_caches()` before every task
+    (`worker_util.setup_spark_files`). Before Python 3.13 that makes every
+    cached `zipimporter` re-read its archive's directory at once: about 16
+    importers over the 1,328 entries of pyspark.zip, 0.2-0.3 s of CPU per
+    task. This replaces `zipimporter.invalidate_caches` in the worker with a
+    version that re-reads an archive only when its (mtime, size, inode)
+    stamp differs from the one recorded at its last re-read (the first call
+    re-reads, to record it); the other importers of that archive take the
+    fresh directory from zipimport's shared cache. Python 3.13 re-reads
+    lazily, so nothing is installed there. Idempotent: called from the
+    extraction body, it installs once per worker process."""
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if sys.version_info >= (3, 13) or hasattr(reread, "stat_gated"):
+        return
+    stamps: dict[str, tuple | None] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            stamp = None
+        cached = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is not None and cached is not None \
+                and stamps.get(self.archive) == stamp:
+            self._files = cached
+            return
+        reread(self)
+        stamps[self.archive] = stamp
+
+    invalidate_caches.stat_gated = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
 def _extract_arrow_batches(batches, passthrough=(), extractor=None):
     """mapInArrow body: per-turn kernel calls over raw Arrow record batches
     (the reference also loops per page within a GPU batch,
@@ -129,6 +169,7 @@ def _extract_arrow_batches(batches, passthrough=(), extractor=None):
     dead-lettered into the `error` column instead of failing the task."""
     import pyarrow as pa
 
+    _gate_zip_invalidation()
     fn = extractor or extract_turn
     spans_type = pa.list_(pa.struct([
         ("start", pa.int32()), ("end", pa.int32()), ("label", pa.string())]))
@@ -174,6 +215,28 @@ def _extract_arrow_batches(batches, passthrough=(), extractor=None):
         yield pa.RecordBatch.from_arrays(arrays, names=names)
 
 
+def _extractor(mode: str = "layout", config=None):
+    """The per-turn kernel function for `mode`/`config`; None means the
+    default `extract_turn`."""
+    if mode == "ocr_only":
+        from glm_ocr_spark.kernel.extract import extract_turn_ocr_only
+        return extract_turn_ocr_only
+    if config is not None:
+        import functools
+        return functools.partial(extract_turn, config=config)
+    return None
+
+
+def _kernel_input(df: DataFrame, passthrough: tuple[str, ...] = ()
+                  ) -> DataFrame:
+    """The columns `_extract_arrow_batches` reads, in its order: the key
+    columns cast to their `EXTRACTED_SCHEMA` types, text, tool, then the
+    passthrough columns."""
+    keys = [F.col(f.name).cast(f.dataType).alias(f.name)
+            for f in EXTRACTED_SCHEMA.fields[:3]]
+    return df.select(*keys, "text", "tool", *passthrough)
+
+
 def extract_transcripts(df: DataFrame,
                         passthrough: tuple[str, ...] = (),
                         mode: str = "layout",
@@ -192,26 +255,16 @@ def extract_transcripts(df: DataFrame,
     ANSI casts (the `get_spark` default) a value out of int range fails the
     job with CAST_OVERFLOW instead of being wrapped.
     """
-    if mode == "ocr_only":
-        from glm_ocr_spark.kernel.extract import extract_turn_ocr_only
-        extractor = extract_turn_ocr_only
-    elif config is not None:
-        import functools
-        extractor = functools.partial(extract_turn, config=config)
-    else:
-        extractor = None
+    extractor = _extractor(mode, config)
     schema = T.StructType(EXTRACTED_SCHEMA.fields + [
         df.schema[c] for c in passthrough
     ])
-    keys = [F.col(f.name).cast(f.dataType).alias(f.name)
-            for f in EXTRACTED_SCHEMA.fields[:3]]
-    cols = [*keys, "text", "tool", *passthrough]
 
     def body(batches):
         yield from _extract_arrow_batches(batches, passthrough=passthrough,
                                           extractor=extractor)
 
-    return df.select(*cols).mapInArrow(body, schema=schema)
+    return _kernel_input(df, passthrough).mapInArrow(body, schema=schema)
 
 
 def ocr_only_conversation_markdown(extracted: DataFrame) -> DataFrame:

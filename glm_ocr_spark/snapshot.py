@@ -21,6 +21,14 @@ design relies on:
     leaves orphan files that no reader can see (Iceberg's unreachable
     files, GC'd later); re-processing a bucket swaps its file list in the
     next manifest — idempotent MERGE semantics;
+  - data files of `run_with_snapshots` are written by the extraction
+    worker itself (pyarrow.parquet inside the `mapInArrow` body, one file
+    per task and bucket), which reports (bucket, path, rows, bytes,
+    dead_letters); the manifest lists exactly the reported files of the
+    task attempts Spark accepted, so the files of failed or speculative
+    attempts are orphans like a crash's. `bytes_out` counts parquet bytes
+    only (no `.crc` sidecars, no `_SUCCESS`). `merge_upsert` writes
+    through Spark and records the staged directory's files;
   - time travel = read any older manifest by snapshot id.
 
 At 10^12 rows the manifest is O(buckets) (thousands of entries), not
@@ -312,25 +320,29 @@ def _fs_and_path(path: str):
     return pafs.LocalFileSystem(), os.path.abspath(path)
 
 
+def _record_scheme(d: str) -> str:
+    """The scheme manifest paths under `d` are recorded with. pyarrow
+    paths come back scheme-less, but `read_output` feeds manifest paths
+    straight to `spark.read.parquet`, which cannot resolve a scheme-less
+    object-store path (review finding) — so the scheme is re-prefixed at
+    record time. Spark-on-Hadoop resolves object stores via s3a:// (s3://
+    and s3n:// are the legacy EMR/retired connectors) while pyarrow accepts
+    plain s3://, so those are normalized (round-5 advice). Local roots
+    record plain absolute paths."""
+    scheme = d.split("://", 1)[0] + "://" if "://" in d else ""
+    return {"s3://": "s3a://", "s3n://": "s3a://"}.get(scheme, scheme)
+
+
 def _staged_parquet_stats(d: str) -> tuple[list[str], int, int]:
-    """(parquet files, rows from footers, bytes) for one staged write.
+    """(parquet files, rows from footers, bytes) for one staged Spark
+    write (`merge_upsert`).
 
     Footer-only reads via `pyarrow.fs` — no data re-scan, runs unchanged
-    against object storage. Manifest paths are recorded WITH the root's
-    filesystem scheme (``s3://bucket/...``): pyarrow listings come back
-    scheme-less, but `read_output` feeds manifest paths straight to
-    `spark.read.parquet`, which cannot resolve a scheme-less object-store
-    path (review finding) — so the scheme is re-prefixed at record time.
-    Local roots record plain absolute paths, as before."""
+    against object storage. Paths are recorded with `_record_scheme`."""
     import pyarrow.parquet as pq
     from pyarrow import fs as pafs
 
-    scheme = d.split("://", 1)[0] + "://" if "://" in d else ""
-    # Spark-on-Hadoop resolves object stores via s3a:// (s3:// and s3n://
-    # are the legacy EMR/retired connectors), while pyarrow accepts
-    # plain s3:// — normalize at record time so read_output can hand
-    # manifest paths straight to spark.read.parquet (round-5 advice).
-    scheme = {"s3://": "s3a://", "s3n://": "s3a://"}.get(scheme, scheme)
+    scheme = _record_scheme(d)
     fs, base = _fs_and_path(d)
     sel = pafs.FileSelector(base, recursive=True, allow_not_found=True)
     files, rows, total = [], 0, 0
@@ -343,6 +355,90 @@ def _staged_parquet_stats(d: str) -> tuple[list[str], int, int]:
             with fs.open_input_file(info.path) as f:
                 rows += pq.ParquetFile(f).metadata.num_rows
     return sorted(files), rows, total
+
+
+# One record per (task, bucket) file written by `_write_bucket_files`, which
+# yields it with the matching Arrow types.
+FILE_RECORD_SCHEMA = ("bucket int, path string, rows long, bytes long, "
+                      "dead_letters long")
+
+# Extracted bytes a task buffers for one bucket before writing them out as
+# a row group.
+WRITE_BUFFER_BYTES = 32 << 20
+
+
+def _write_bucket_files(batches, staged: str, extractor=None):
+    """mapInArrow body of `run_with_snapshots`: extract, then write.
+
+    Runs the extraction kernel (`pipeline._extract_arrow_batches`) over
+    batches carrying a trailing `bucket` column and writes each bucket's
+    rows with pyarrow.parquet to
+    ``staged/bucket=N/part-<partition>-<uuid4>.parquet``: one file per
+    (task, bucket), the uuid keeps task attempts apart. The input arrives
+    sorted by bucket, so a bucket's rows come as one run; they are buffered
+    and become a row group of the bucket's file when the run ends or
+    `WRITE_BUFFER_BYTES` is reached (unsorted input stays correct, with
+    more row groups). Files are closed also when the task fails; a failed
+    attempt's files are orphans no manifest lists. Yields one small record
+    per file (FILE_RECORD_SCHEMA): the extracted rows never go back to the
+    JVM."""
+    import contextlib
+    import itertools
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import TaskContext
+
+    from glm_ocr_spark.pipeline import _extract_arrow_batches
+
+    fs, base = _fs_and_path(staged)
+    task = TaskContext.get().partitionId()
+    files: dict[int, list] = {}  # bucket -> [path, sink, writer, rows, dead]
+    cur, pending, buffered = None, [], 0
+    recs = []
+    with contextlib.ExitStack() as opened:
+
+        def flush():
+            if not pending:
+                return
+            f = files.get(cur)
+            if f is None:
+                d = f"{base}/bucket={cur}"
+                fs.create_dir(d)
+                path = f"{d}/part-{task:05d}-{uuid.uuid4().hex}.parquet"
+                sink = opened.enter_context(fs.open_output_stream(path))
+                writer = opened.enter_context(
+                    pq.ParquetWriter(sink, pending[0].schema))
+                f = files[cur] = [path, sink, writer, 0, 0]
+            t = pa.Table.from_batches(pending)
+            f[2].write_table(t)
+            f[3] += t.num_rows
+            f[4] += t.num_rows - t.column("error").null_count
+            pending.clear()
+
+        for out in _extract_arrow_batches(batches, ("bucket",), extractor):
+            runs = itertools.groupby(out.column("bucket").to_pylist())
+            out = out.drop_columns(["bucket"])
+            start = 0
+            for b, run in runs:
+                n = sum(1 for _ in run)
+                if b != cur or buffered >= WRITE_BUFFER_BYTES:
+                    flush()
+                    cur, buffered = b, 0
+                chunk = out.slice(start, n)
+                pending.append(chunk)
+                buffered += chunk.nbytes
+                start += n
+        flush()
+        for b, (path, sink, writer, rows, dead) in sorted(files.items()):
+            writer.close()
+            recs.append({"bucket": b, "path": path, "rows": rows,
+                         "bytes": sink.tell(), "dead_letters": dead})
+    if recs:
+        yield pa.RecordBatch.from_pylist(recs, schema=pa.schema([
+            ("bucket", pa.int32()), ("path", pa.string()),
+            ("rows", pa.int64()), ("bytes", pa.int64()),
+            ("dead_letters", pa.int64())]))
 
 
 def run_with_snapshots(
@@ -360,38 +456,68 @@ def run_with_snapshots(
 
     Like state.run_with_checkpoint, but output data and state watermarks
     are published together through SnapshotStore.commit — the Iceberg-
-    protocol path (SURVEY §7.3.5). `fail_before_commit_n` crashes after
-    the Nth batch's data files are staged but BEFORE its commit: the
-    atomicity test — those files must stay invisible.
+    protocol path (SURVEY §7.3.5). `mode`/`config` select the extraction
+    kernel exactly as in `pipeline.extract_transcripts`.
+
+    Each chunk of `buckets_per_commit` buckets is one `mapInArrow` whose
+    body extracts and writes the parquet files itself
+    (`_write_bucket_files`) and returns one (bucket, path, rows, bytes,
+    dead_letters) record per file; the driver collects them and commits
+    the chunk's bucket entries from them — a bucket without rows gets
+    ``files: []``. The input is sorted within each partition by (bucket,
+    conv_id, turn_idx) before the kernel (no exchange), so a task writes
+    one bucket at a time and every file is sorted by (conv_id, turn_idx).
+    Only the files of the task attempts Spark accepted are listed, never a
+    directory, so files left by failed or speculative attempts stay
+    unreachable orphans (removed by `expire_snapshots`). `bytes_out` is
+    the parquet files' size, with no `.crc` sidecars.
+    `fail_before_commit_n` crashes after the Nth batch's data files are
+    staged but BEFORE its commit: the atomicity test — those files must
+    stay invisible.
+
+    Returns resumed/processed bucket and commit counts, the new snapshot
+    id, and this run's `rows_out` and `dead_letters` totals.
     """
     from pyspark.sql import functions as F
 
-    from glm_ocr_spark.pipeline import extract_transcripts
+    from glm_ocr_spark.pipeline import _extractor, _kernel_input
     from glm_ocr_spark.state import bucket_col
 
+    extractor = _extractor(mode, config)
     store = SnapshotStore(catalog_root)
     done = store.completed_buckets(input_snapshot)
     pending = [b for b in range(n_buckets) if b not in done]
     chunk = buckets_per_commit or len(pending) or 1
 
-    src = transcripts.withColumn("bucket", bucket_col(n_buckets))
-    commits = 0
-    processed = 0
+    src = _kernel_input(
+        transcripts.withColumn("bucket", bucket_col(n_buckets)), ("bucket",))
+    commits = processed = rows_out = dead_letters = 0
     for i in range(0, len(pending), chunk):
         batch = pending[i:i + chunk]
-        part = src.filter(F.col("bucket").isin(batch))
         staged = store.staging_dir()
-        (extract_transcripts(part, passthrough=("bucket",))
-         .write.mode("overwrite").partitionBy("bucket").parquet(staged))
+
+        def body(batches, staged=staged):
+            yield from _write_bucket_files(batches, staged, extractor)
+
+        recs = (src.filter(F.col("bucket").isin(batch))
+                .sortWithinPartitions("bucket", "conv_id", "turn_idx")
+                .mapInArrow(body, FILE_RECORD_SCHEMA).collect())
         if fail_before_commit_n is not None and \
                 commits + 1 >= fail_before_commit_n:
             raise RuntimeError("injected crash before snapshot commit")
-        entries = {}
-        for b in batch:
-            bdir = os.path.join(staged, f"bucket={b}")
-            files, rows, nbytes = _staged_parquet_stats(bdir)
-            entries[b] = {"files": files, "rows_out": rows,
-                          "bytes_out": nbytes}
+        scheme = _record_scheme(staged)
+        entries = {b: {"files": [], "rows_out": 0, "bytes_out": 0,
+                       "dead_letters": 0} for b in batch}
+        for r in recs:
+            e = entries[r["bucket"]]
+            e["files"].append(scheme + r["path"])
+            e["rows_out"] += r["rows"]
+            e["bytes_out"] += r["bytes"]
+            e["dead_letters"] += r["dead_letters"]
+        for e in entries.values():
+            e["files"].sort()
+            rows_out += e["rows_out"]
+            dead_letters += e["dead_letters"]
         store.commit(entries, input_snapshot, n_buckets=n_buckets)
         commits += 1
         processed += len(batch)
@@ -401,6 +527,8 @@ def run_with_snapshots(
         "processed_buckets": processed,
         "commits": commits,
         "snapshot_id": store.current_id(),
+        "rows_out": rows_out,
+        "dead_letters": dead_letters,
     }
 
 

@@ -5,7 +5,13 @@ Behavioral parity with /root/reference/glmocr/utils/layout_postprocess_utils.py
 unclip_boxes :116-176, oversize filter :242-264, order sort :332-333,
 clamp/drop :361-369) — re-implemented, not copied: the hot paths here are
 fully vectorized (pairwise IoU matrices) where the reference uses per-pair
-Python loops, because inside an Arrow batch we may carry many turns' blocks.
+Python loops.
+
+`survivors` runs the stages in order for one page; extract_turn calls it
+for pages of more than `geometry_py.SMALL_N` blocks and the pure-Python
+`geometry_py.survivors_small` (same signature, same result) below that.
+It calls the stage functions as module globals, so a profiler that wraps
+them by module attribute sees each stage.
 
 Boxes are numpy float arrays of shape (n, 7): columns
 (cls_id, score, x1, y1, x2, y2, order).
@@ -272,3 +278,34 @@ def xy_cut_order(boxes: np.ndarray) -> np.ndarray:
         return list(sub[order])
 
     return np.asarray(_rec(idx, 0), dtype=np.int64)
+
+
+def survivors(rows: list[tuple], spans: list, config, image_cls_id: int,
+              page_w: float, page_h: float, has_order: bool) -> list[tuple]:
+    """One page's geometry chain: NMS (if enabled) -> oversized-image
+    filter -> merge modes -> reading order (model order or XY-cut) ->
+    unclip -> clamp/validate.
+
+    rows: [(cls_id, score, x1, y1, x2, y2, order), ...] of floats, with
+    `spans` parallel to them; `config` an extract.ExtractConfig. Returns
+    [(cls_id:int, score, x1, y1, x2, y2, span), ...] with clamped
+    int-truncated float coords, in final reading order.
+    """
+    boxes = np.array(rows, dtype=np.float64)
+    idx = np.arange(len(boxes))
+    if config.nms_enabled:
+        idx = idx[nms(boxes)]
+    idx = idx[filter_oversized_images(boxes[idx], image_cls_id,
+                                      page_w, page_h)]
+    idx = idx[apply_merge_modes(boxes[idx], config.merge_modes,
+                                config.preserve_ids)]
+    if len(idx) == 0:
+        return []
+    if has_order:
+        idx = idx[np.argsort(boxes[idx, ORDER], kind="stable")]
+    else:
+        idx = idx[xy_cut_order(boxes[idx, X1:Y2 + 1])]
+    out, keep = clamp_and_validate(unclip(boxes[idx], config.unclip_ratio),
+                                   page_w, page_h)
+    return [(int(r[CLS]), r[SCORE], r[X1], r[Y1], r[X2], r[Y2],
+             spans[i]) for r, i in zip(out[keep].tolist(), idx[keep].tolist())]

@@ -98,8 +98,8 @@ def get_spark(app: str = "glm-ocr-spark", master: str | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.driver.extraJavaOptions", "-XX:MaxDirectMemorySize=2g")
         .config("spark.sql.session.timeZone", "UTC")
-        # ANSI casts (Spark 4's default, pinned): extract_transcripts casts
-        # its key columns and relies on an overflow failing, not wrapping
+        # ANSI casts (Spark 4's default, pinned): a cast that overflows
+        # fails instead of wrapping
         .config("spark.sql.ansi.enabled", "true")
         # CPU-bound Python-UDF extraction wants far smaller input splits than
         # the 128 MB scan default: one split must be minutes of CPU, not
@@ -231,9 +231,28 @@ def _kernel_input(df: DataFrame, passthrough: tuple[str, ...] = ()
                   ) -> DataFrame:
     """The columns `_extract_arrow_batches` reads, in its order: the key
     columns cast to their `EXTRACTED_SCHEMA` types, text, tool, then the
-    passthrough columns."""
-    keys = [F.col(f.name).cast(f.dataType).alias(f.name)
-            for f in EXTRACTED_SCHEMA.fields[:3]]
+    passthrough columns.
+
+    A numeric key of another type than its int target (a bigint
+    `turn_idx`) is range-checked before the cast, so a value outside the
+    int range fails the job naming the column and the range, with ANSI
+    casts off too (where the bare cast would wrap). A key that already has
+    its target type is selected as is."""
+    keys = []
+    for f in EXTRACTED_SCHEMA.fields[:3]:
+        col = F.col(f.name)
+        src = df.schema[f.name].dataType
+        if (isinstance(f.dataType, T.IntegerType) and src != f.dataType
+                and isinstance(src, T.NumericType)):
+            lo, hi = -2**31, 2**31 - 1
+            col = F.when(col.isNull() | col.between(lo, hi),
+                         col.cast(f.dataType)).otherwise(F.raise_error(
+                             F.concat(F.lit(f"{f.name} "), col.cast("string"),
+                                      F.lit(f" is outside the int range "
+                                            f"[{lo}, {hi}]"))))
+        else:
+            col = col.cast(f.dataType)
+        keys.append(col.alias(f.name))
     return df.select(*keys, "text", "tool", *passthrough)
 
 
@@ -251,9 +270,9 @@ def extract_transcripts(df: DataFrame,
     enable_layout=false path, pipeline.py:175-280).
 
     The forwarded key columns are cast to their `EXTRACTED_SCHEMA` types, so
-    e.g. a bigint `turn_idx` from a schema-inferred table is accepted; under
-    ANSI casts (the `get_spark` default) a value out of int range fails the
-    job with CAST_OVERFLOW instead of being wrapped.
+    e.g. a bigint `turn_idx` from a schema-inferred table is accepted; a
+    value out of int range fails the job (ANSI casts on or off) instead of
+    being wrapped.
     """
     extractor = _extractor(mode, config)
     schema = T.StructType(EXTRACTED_SCHEMA.fields + [

@@ -1,5 +1,9 @@
 """U1-U3 pluggability + P1/P2 canonicalization tests."""
 
+import json
+
+import pytest
+
 from glm_ocr_spark.kernel.canonicalize import canonicalize_payload
 from glm_ocr_spark.kernel.extract import extract_turn
 from glm_ocr_spark.kernel.segment import Block
@@ -40,6 +44,102 @@ class TestPluggability:
 
     def test_defaults_unchanged(self):
         assert extract_turn(PAYLOAD)["extracted_text"] == "hello world"
+
+
+# a 1000x2000 page: a title, an abandoned header between it and the body
+# (so the dense index skips it), a body text, a skip-task image, a formula
+HOOK_PAGE = (
+    '<page w="1000" h="2000"/>\n'
+    '<block label="doc_title" score="0.95" bbox="100,40,900,120" order="1">'
+    '数据 Title</block>\n'
+    '<block label="header" score="0.9" bbox="0,0,1000,30" order="2">'
+    'site header</block>\n'
+    '<block label="text" score="0.8" bbox="100,200,900,600" order="3">'
+    'body  text here</block>\n'
+    '<block label="image" score="0.7" bbox="100,700,500,1100" order="4">'
+    '</block>\n'
+    '<block label="display_formula" score="0.9" bbox="100,1200,900,1300" '
+    'order="5">E = mc^2</block>'
+)
+
+
+def _span(content):
+    start = HOOK_PAGE.index(content)
+    return (start, start + len(content))
+
+
+class TestFormatterHook:
+    """The contract of extract_turn's `formatter` hook: the region shape
+    it receives, when it is called, and how its output serializes."""
+
+    def test_receives_native_regions_with_raw_content(self):
+        seen = []
+
+        def record(regions):
+            seen.append([dict(r) for r in regions])
+            return regions
+
+        r = extract_turn(HOOK_PAGE, formatter=record)
+        image_at = HOOK_PAGE.index("</block>\n<block label=\"display")
+        assert seen == [[
+            {"index": 0, "label": "doc_title", "score": 0.95,
+             "bbox_2d": [100, 20, 900, 60], "task_type": "text",
+             "span": _span("数据 Title"), "content": "数据 Title"},
+            {"index": 1, "label": "text", "score": 0.8,
+             "bbox_2d": [100, 100, 900, 300], "task_type": "text",
+             "span": _span("body  text here"), "content": "body  text here"},
+            {"index": 2, "label": "image", "score": 0.7,
+             "bbox_2d": [100, 350, 500, 550], "task_type": "skip",
+             "span": (image_at, image_at), "content": None},
+            {"index": 3, "label": "display_formula", "score": 0.9,
+             "bbox_2d": [100, 600, 900, 650], "task_type": "formula",
+             "span": _span("E = mc^2"), "content": "E = mc^2"},
+        ]]
+        assert [list(r) for r in seen[0]] == [[
+            "index", "label", "score", "bbox_2d", "task_type", "span",
+            "content"]] * 4
+        # an identity hook's regions serialize with their native labels
+        assert r["extracted_text"] == \
+            "数据 Title\n\nbody  text here\n\nE = mc^2"
+        assert [s[2] for s in r["spans"]] == [
+            "doc_title", "text", "image", "display_formula"]
+        assert json.loads(r["json"])[0][3] == {
+            "index": 3, "label": "display_formula", "content": "E = mc^2",
+            "bbox_2d": [100, 600, 900, 650]}
+
+    def test_not_called_when_every_block_is_abandoned(self):
+        calls = []
+        page = ('<block label="header" score="0.9" bbox="0,0,1000,30" '
+                'order="1">top</block>\n'
+                '<block label="footer" score="0.9" bbox="0,970,1000,1000" '
+                'order="2">bottom</block>')
+        r = extract_turn(page, formatter=lambda rs: calls.append(rs) or rs)
+        assert calls == []
+        assert r == extract_turn("")
+
+    @pytest.mark.parametrize("change", ["float_bbox", "dict_content"])
+    def test_nonconforming_fields_fall_back_to_json_dumps(self, change):
+        out = []
+
+        def hook(regions):
+            for r in regions:
+                if change == "float_bbox":
+                    r["bbox_2d"] = [v / 10 for v in r["bbox_2d"]]
+                elif r["label"] == "image":
+                    r["content"] = {"caption": "图 1", "alt": None}
+            out.extend(regions)
+            return regions
+
+        r = extract_turn(HOOK_PAGE, formatter=hook)
+        assert r["json"] == json.dumps([[
+            {k: reg[k] for k in ("index", "label", "content", "bbox_2d")}
+            for reg in out]], ensure_ascii=False)
+        assert r["extracted_text"] == \
+            "数据 Title\n\nbody  text here\n\nE = mc^2"
+        image_bbox = out[2]["bbox_2d"]
+        assert f"![](page=0,bbox={image_bbox})" in r["markdown"]
+        assert [s[2] for s in r["spans"]] == [
+            "doc_title", "text", "image", "display_formula"]
 
 
 class TestExtractConfig:

@@ -3,8 +3,12 @@ vectorized kernel / Spark pipeline and the independent single-node oracle
 (BASELINE.json north_rule: "matching the reference's extracted text/spans per
 turn (per-turn text equality under stable turn ordering)")."""
 
+import random
+
 import pytest
 
+from glm_ocr_spark.config import LABEL2ID, SCORE_THRESHOLD
+from glm_ocr_spark.data import gen
 from glm_ocr_spark.data.gen import (
     conv_id_of,
     gen_turn_payload,
@@ -13,9 +17,51 @@ from glm_ocr_spark.data.gen import (
     transcripts_df,
 )
 from glm_ocr_spark.kernel.extract import extract_turn
+from glm_ocr_spark.kernel.geometry_py import SMALL_N
 from tests.oracle import oracle_extract_turn
 
 FIELDS = ("extracted_text", "markdown", "json", "spans", "n_blocks")
+
+
+def _dense_page(seed: int, ordered: bool) -> tuple[str, int]:
+    """A seeded layout page of 65-300 blocks over the score threshold, so
+    extract_turn takes the numpy geometry path: gen.py's block templates
+    stacked in 100-px bands, about a third of the blocks followed by a
+    shifted near-duplicate (same or another label, so both NMS thresholds
+    and the containment modes fire), on every other page a page-sized
+    image (the oversize filter), emitted shuffled, with model order or
+    without it (XY-cut). Returns (payload, blocks over the threshold)."""
+    r = random.Random(f"dense:{seed}")
+    target = r.randrange(65, 301)
+    labels = list(LABEL2ID)
+    specs: list = []
+    passing = band = 0
+    while passing < target:
+        for label, score, bbox, content in r.choice(gen._TEMPLATES)(
+                r, band * 100 + 2, (band + 1) * 100 - 2):
+            new = [(label, score, bbox, content)]
+            if r.random() < 0.35:
+                dx, dy = r.randint(-12, 12), r.randint(-6, 6)
+                new.append((label if r.random() < 0.6 else r.choice(labels),
+                            round(r.uniform(0.3, 1.0), 2),
+                            (bbox[0] + dx, bbox[1] + dy, bbox[2] + dx,
+                             bbox[3] + dy), "dup " + content))
+            specs.extend(new)
+            passing += sum(s[1] >= SCORE_THRESHOLD for s in new)
+        band += 1
+    if r.random() < 0.5:  # a page-sized image for the oversize filter
+        specs.append(("image", 0.9, (0, 0, 1000, band * 100 - r.randint(0, 5)),
+                      ""))
+    emit = list(enumerate(specs, start=1))
+    r.shuffle(emit)
+    parts = [f'<page w="1000" h="{band * 100}"/>']
+    for order, (label, score, bbox, content) in emit:
+        order_attr = f' order="{order}"' if ordered else ""
+        parts.append(
+            f'<block label="{label}" score="{score}" '
+            f'bbox="{",".join(str(int(v)) for v in bbox)}"{order_attr}>'
+            f"{content}</block>")
+    return "\n".join(parts), passing
 
 
 def _oracle_for(conv_id: str, turn_idx: int):
@@ -42,6 +88,18 @@ class TestKernelVsOracle:
                         break
         assert not mismatches, f"{len(mismatches)} mismatches, first: " \
                                f"{mismatches[0][:3]}"
+
+    @pytest.mark.parametrize("seed", range(16))
+    def test_dense_pages_above_small_n(self, seed):
+        """Pages over SMALL_N blocks (the numpy geometry path), half in
+        model order and half XY-cut, byte-equal to the oracle."""
+        payload, passing = _dense_page(seed, ordered=seed % 2 == 0)
+        assert passing > SMALL_N
+        k = extract_turn(payload)
+        o = oracle_extract_turn(payload, "")
+        assert k["n_blocks"] > 0
+        for f in FIELDS:
+            assert k[f] == o[f], (seed, f)
 
     def test_empty_and_null_payloads(self):
         assert extract_turn("") == extract_turn(None)

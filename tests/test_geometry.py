@@ -216,16 +216,21 @@ class TestUnclip:
         assert out[1, geo.X1:geo.Y2 + 1].tolist() == [10, 10, 30, 30]
 
     def test_per_class_dict_paths_agree(self):
-        """Vectorized and small-n pure-Python paths must agree on the
-        per-class form (path-equivalence invariant of the kernel)."""
+        """The numpy and the small-n pure-Python survivors must agree on
+        the per-class form (path-equivalence invariant of the kernel)."""
         from glm_ocr_spark.kernel import geometry_py as gpy
+        from glm_ocr_spark.kernel.extract import ExtractConfig
 
-        rows = [(22, 0.9, 10.0, 10.0, 30.0, 30.0, 1),
-                (5, 0.8, 0.0, 0.0, 12.0, 8.0, 2),
-                (7, 0.7, 4.0, 4.0, 6.0, 16.0, 3)]
-        ratio = {22: (2.0, 1.5), 7: (0.5, 3.0)}
-        b = boxes([list(r) for r in rows])
-        vec = geo.unclip(b, ratio)
-        py = gpy.unclip(rows, ratio)
-        for i in range(len(rows)):
-            assert vec[i, geo.X1:geo.Y2 + 1].tolist() == list(py[i][2:6])
+        rows = [(22.0, 0.9, 10.0, 10.0, 30.0, 30.0, 1.0),
+                (5.0, 0.8, 0.0, 0.0, 12.0, 8.0, 2.0),
+                (7.0, 0.7, 4.0, 4.0, 6.0, 16.0, 3.0)]
+        spans = [(0, 1), (1, 2), (2, 3)]
+        # NMS and containment off, so every box reaches unclip
+        cfg = ExtractConfig(nms_enabled=False, merge_modes={},
+                            unclip_ratio={22: (2.0, 1.5), 7: (0.5, 3.0)})
+        args = (rows, spans, cfg, LABEL2ID["image"], 100.0, 100.0, True)
+        vec = geo.survivors(*args)
+        assert gpy.survivors_small(*args) == vec
+        assert [r[2:6] for r in vec] == [(0.0, 5.0, 40.0, 35.0),
+                                         (0.0, 0.0, 12.0, 8.0),
+                                         (4.0, 0.0, 5.0, 28.0)]

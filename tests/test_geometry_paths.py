@@ -1,27 +1,40 @@
-"""Equivalence of the two geometry paths: pure-Python small-n fast path vs
-vectorized numpy path, on randomized box sets (including degenerate,
-inverted, overlapping, out-of-page geometry)."""
+"""Equivalence of the two geometry implementations: the pure-Python
+`geometry_py.survivors_small` (pages of <= SMALL_N blocks) and the numpy
+`geometry.survivors` (above) must return the same survivors, spans
+included, on randomized box sets (degenerate, inverted, overlapping,
+out-of-page geometry), for both reading-order modes and across the
+ExtractConfig knobs they read."""
 
 import random
+import re
 
-import numpy as np
 import pytest
 
-from glm_ocr_spark.config import (
-    LABEL2ID,
-    LAYOUT_MERGE_BBOXES_MODE,
-    PRESERVE_CLASS_IDS,
-)
+from glm_ocr_spark.config import ID2LABEL, LABEL2ID
 from glm_ocr_spark.kernel import geometry as geo
 from glm_ocr_spark.kernel import geometry_py as gpy
+from glm_ocr_spark.kernel.extract import ExtractConfig, extract_turn
 
 IMG = LABEL2ID["image"]
+
+# (config, page_w, page_h); the landscape page uses the other oversize
+# threshold
+CASES = {
+    "default": (ExtractConfig(), 1000.0, 1000.0),
+    "nms_off": (ExtractConfig(nms_enabled=False), 1000.0, 1000.0),
+    "unclip": (ExtractConfig(unclip_ratio=(2.0, 1.5)), 1000.0, 1000.0),
+    "unclip_per_class": (ExtractConfig(
+        unclip_ratio={22: (2.0, 1.5), 7: (0.5, 3.0)}), 1000.0, 1000.0),
+    "merge_none": (ExtractConfig(merge_modes={}), 1000.0, 1000.0),
+    "merge_union": (ExtractConfig(merge_modes={22: "union"}), 1000.0, 1000.0),
+    "landscape": (ExtractConfig(), 1200.0, 800.0),
+}
 
 
 def random_rows(rng, n):
     rows = []
     for _ in range(n):
-        cls = rng.choice([0, 5, 11, 14, 18, 20, 21, 22])
+        cls = rng.choice([0, 5, 7, 11, 14, 18, 20, 21, 22])
         score = rng.choice([0.31, 0.5, 0.55, 0.7, 0.7, 0.9, 0.95, 1.0])
         x1 = rng.uniform(-50, 1050)
         y1 = rng.uniform(-50, 1050)
@@ -38,71 +51,42 @@ def random_rows(rng, n):
     return rows
 
 
-def run_python(rows, page_w=1000.0, page_h=1000.0, use_order=True):
-    idx = list(range(len(rows)))
-
-    def pick(sel):
-        nonlocal rows, idx
-        rows = [rows[i] for i in sel]
-        idx = [idx[i] for i in sel]
-
-    pick(gpy.nms(rows))
-    pick(gpy.filter_oversized_images(rows, IMG, page_w, page_h))
-    pick(gpy.apply_merge_modes(rows, LAYOUT_MERGE_BBOXES_MODE,
-                               PRESERVE_CLASS_IDS))
-    if rows:
-        if use_order:
-            pick(sorted(range(len(rows)), key=lambda i: rows[i][6]))
-        else:
-            pick(gpy.xy_cut_order(rows))
-        rows2, kept = gpy.clamp_and_validate(rows, page_w, page_h)
-        idx = [idx[i] for i in kept]
-        rows = rows2
-    return idx, [(r[2], r[3], r[4], r[5]) for r in rows]
+def both(rows, case="default", has_order=True):
+    """(survivors_small, geometry.survivors) on the same page."""
+    config, page_w, page_h = CASES[case]
+    spans = [(i * 10, i * 10 + 5) for i in range(len(rows))]
+    return tuple(
+        fn(list(rows), list(spans), config, IMG, page_w, page_h, has_order)
+        for fn in (gpy.survivors_small, geo.survivors))
 
 
-def run_numpy(rows, page_w=1000.0, page_h=1000.0, use_order=True):
-    arr = np.array(rows, dtype=np.float64)
-    idx = np.arange(len(rows))
-
-    def take(sel):
-        nonlocal arr, idx
-        arr = arr[sel]
-        idx = idx[sel]
-
-    take(geo.nms(arr))
-    take(geo.filter_oversized_images(arr, IMG, page_w, page_h))
-    take(geo.apply_merge_modes(arr, LAYOUT_MERGE_BBOXES_MODE,
-                               PRESERVE_CLASS_IDS))
-    if len(arr):
-        if use_order:
-            take(np.argsort(arr[:, geo.ORDER], kind="stable"))
-        else:
-            take(geo.xy_cut_order(arr[:, geo.X1:geo.Y2 + 1]))
-        arr, keep = geo.clamp_and_validate(arr, page_w, page_h)
-        take(keep)
-    return list(idx), [tuple(arr[i, geo.X1:geo.Y2 + 1]) for i in range(len(arr))]
+def _grid():
+    # the default config keeps its plain "<order>-<seed>" id
+    for case in CASES:
+        for seed in range(40):
+            for use_order in (True, False):
+                tail = "" if case == "default" else f"-{case}"
+                yield pytest.param(use_order, seed, case,
+                                   id=f"{use_order}-{seed}{tail}")
 
 
-@pytest.mark.parametrize("seed", range(40))
-@pytest.mark.parametrize("use_order", [True, False])
-def test_paths_equivalent(seed, use_order):
+@pytest.mark.parametrize("use_order,seed,case", _grid())
+def test_paths_equivalent(use_order, seed, case):
     rng = random.Random(seed)
-    n = rng.randint(1, 30)
-    rows = random_rows(rng, n)
-    pi, pb = run_python(list(rows), use_order=use_order)
-    ni, nb = run_numpy(list(rows), use_order=use_order)
-    assert pi == ni, (seed, use_order)
-    assert pb == nb, (seed, use_order)
+    small, numpy_ = both(random_rows(rng, rng.randint(1, 30)), case,
+                         use_order)
+    assert small == numpy_, (case, seed, use_order)
 
 
 def test_large_n_equivalent():
-    rng = random.Random(123)
-    rows = random_rows(rng, 120)  # above SMALL_N: both paths must still agree
-    pi, pb = run_python(list(rows))
-    ni, nb = run_numpy(list(rows))
-    assert pi == ni
-    assert pb == nb
+    # above SMALL_N: extract_turn takes the numpy path here, and the
+    # pure-Python one must still agree
+    rows = random_rows(random.Random(123), 120)
+    for case in CASES:
+        for has_order in (True, False):
+            small, numpy_ = both(rows, case, has_order)
+            assert small, (case, has_order)
+            assert small == numpy_, (case, has_order)
 
 
 def test_infinite_coords_agree():
@@ -110,33 +94,30 @@ def test_infinite_coords_agree():
         (22.0, 0.9, 0.0, 0.0, float("inf"), 100.0, 1.0),
         (22.0, 0.8, 10.0, 10.0, 500.0, 90.0, 2.0),
     ]
-    pi, _ = run_python(list(rows))
-    ni, _ = run_numpy(list(rows))
-    assert pi == ni
+    for case in CASES:
+        for has_order in (True, False):
+            small, numpy_ = both(rows, case, has_order)
+            assert small == numpy_, (case, has_order)
 
 
-class _FusedCfg:
-    """Minimal config carrier for survivors_small."""
-    nms_enabled = True
-    merge_modes = LAYOUT_MERGE_BBOXES_MODE
-    preserve_ids = PRESERVE_CLASS_IDS
-    unclip_ratio = (1.0, 1.0)
+def _payload(rows):
+    return "\n".join(
+        f'<block label="{ID2LABEL[int(r[0])]}" score="{r[1]}" '
+        f'bbox="{r[2]!r},{r[3]!r},{r[4]!r},{r[5]!r}" order="{int(r[6])}">'
+        f"block {i} " + "word " * (i % 4) + "</block>"
+        for i, r in enumerate(rows))
 
 
 @pytest.mark.parametrize("seed", range(40))
 @pytest.mark.parametrize("use_order", [True, False])
-def test_fused(seed, use_order):
-    """survivors_small (the fused index-based pipeline) must match the
-    staged nms -> filters -> order -> clamp chain exactly, spans included."""
+def test_fused(seed, use_order, monkeypatch):
+    """The whole kernel gives the same five fields whichever geometry path
+    extract_turn dispatches to (SMALL_N lowered to 0 forces numpy)."""
     rng = random.Random(seed + 7000)
-    n = rng.randint(1, 30)
-    rows = random_rows(rng, n)
-    spans = [(i * 10, i * 10 + 5) for i in range(n)]
-    pi, pb = run_python(list(rows), use_order=use_order)
-    staged = [
-        (int(rows_i[0]), float(rows_i[1]), b[0], b[1], b[2], b[3], spans[i])
-        for i, rows_i, b in ((i, rows[i], pb[k]) for k, i in enumerate(pi))
-    ]
-    fused = gpy.survivors_small(list(rows), list(spans), _FusedCfg, IMG,
-                                1000.0, 1000.0, use_order)
-    assert fused == staged, (seed, use_order)
+    rows = random_rows(rng, rng.randint(1, 30))
+    payload = _payload(rows)
+    if not use_order:
+        payload = re.sub(r' order="\d+"', "", payload)
+    small = extract_turn(payload)
+    monkeypatch.setattr(gpy, "SMALL_N", 0)
+    assert extract_turn(payload) == small, (seed, use_order)

@@ -1,6 +1,7 @@
 """Contract of the batch job `pipeline.run`: the written rows, the output
 file layout, one kernel pass per input row, and the key-column casts of
-`extract_transcripts` (bigint `turn_idx` accepted in range, loud outside)."""
+`extract_transcripts` (bigint `turn_idx` accepted in range, loud outside,
+ANSI casts on or off)."""
 
 import datetime as dt
 import glob
@@ -133,7 +134,25 @@ def test_bigint_turn_idx_out_of_range_fails_loud(spark, tmp_path):
     rows.append(("conv-a", 2**31, *gen_turn_payload("conv-a", 1), rows[0][-1]))
     path = str(tmp_path / "big")
     df = _write_input(spark, path, "bigint", rows)
-    with pytest.raises(Exception, match="CAST_OVERFLOW"):
-        extract_transcripts(df).collect()
-    with pytest.raises(Exception, match="CAST_OVERFLOW"):
-        run(spark, path, str(tmp_path / "out"))
+    loud = (r"turn_idx 2147483648 is outside the int range "
+            r"\[-2147483648, 2147483647\]")
+    # with ANSI casts off a bare cast would wrap the key silently
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            with pytest.raises(Exception, match=loud):
+                extract_transcripts(df).collect()
+            with pytest.raises(Exception, match=loud):
+                run(spark, path, str(tmp_path / f"out-{mode}"))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
+def test_int_turn_idx_plan_has_no_range_guard(spark, tmp_path, capsys):
+    """An int32 key needs no guard: its plan stays the plain projection."""
+    for turn_type, guarded in (("int", False), ("bigint", True)):
+        df = _write_input(spark, str(tmp_path / turn_type), turn_type)
+        capsys.readouterr()
+        extract_transcripts(df).explain()
+        assert ("raise_error" in capsys.readouterr().out) is guarded
